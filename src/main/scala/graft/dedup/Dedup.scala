@@ -1935,14 +1935,27 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       keyCol: String,
       expectedItems: Long = 1000000L,
       fpp: Double = 0.01
-  ): DataFrame = {
-    val spark = newDf.sparkSession
+  ): DataFrame =
     // An EMPTY history admits everything: stat.bloomFilter over zero
     // rows returns a null buffer (engine NPE on readFrom), and the
     // anti-join against nothing is the identity — short-circuit. This
     // is the cold-start shape of every resume loop (first run, no
     // manifest yet), so it must work, not throw.
-    if (hist.isEmpty) return newDf
+    if (hist.isEmpty) newDf
+    else bloomAntiJoinNonEmpty(newDf, hist, keyCol, expectedItems, fpp)
+
+  /** [[bloomAntiJoin]] for a caller that already knows `hist` has rows
+    * (e.g. it counted the history to size the filter), so the
+    * emptiness probe is not a second job over the same relation.
+    */
+  private[graft] def bloomAntiJoinNonEmpty(
+      newDf: DataFrame,
+      hist: DataFrame,
+      keyCol: String,
+      expectedItems: Long,
+      fpp: Double
+  ): DataFrame = {
+    val spark = newDf.sparkSession
     // Build and probe MUST hash the same representation: stat
     // .bloomFilter hashes integral columns as longs and strings as
     // bytes, so the probe is typed to match (a string probe against a
@@ -1974,9 +1987,11 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     }
     val definitelyNovel = newDf.filter(!mightContain)
     val candidates = newDf.filter(mightContain)
+    // no distinct() on the history side: duplicate right keys cannot
+    // change a left-anti result, and without the aggregate the history
+    // broadcasts straight from its scan (one stage, not two)
     definitelyNovel.unionByName(
-      candidates.join(
-        hist.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti"))
+      candidates.join(hist.select(col(keyCol)), Seq(keyCol), "left_anti"))
   }
 
   /** Rolling 64-bit polynomial window hashes: h(w) = Σ c_j·B^(L-1-j)

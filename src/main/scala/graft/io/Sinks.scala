@@ -171,7 +171,7 @@ object Sinks {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (batchId >= 0L &&
-      lastAppliedShardBatch(fs, root).exists {
+      lastAppliedBatch(fs, root).exists {
         case (tag, id) => tag == batchTag && batchId <= id
       }) {
       // replayed micro-batch: already on disk, emit an empty summary
@@ -201,7 +201,7 @@ object Sinks {
     // the threshold, but a bulk backfill through this face would
     clusterIfManyShards(joined, packed)
       .write.mode("append").partitionBy("shard").parquet(path)
-    if (batchId >= 0L) recordShardBatch(fs, root, batchId, batchTag)
+    if (batchId >= 0L) recordBatch(fs, root, batchId, batchTag)
     packed
       .groupBy(col("shard"))
       .agg(
@@ -228,15 +228,17 @@ object Sinks {
     if (nShards >= minShards) joined.repartition(col("shard")) else joined
   }
 
-  /** Last (batchTag, batchId) applied to the shard corpus at `root`,
-    * or None if the `_last_batch` manifest is absent (cold start /
-    * pre-manifest corpus) OR unreadable/malformed — a truncated or
+  /** Last (batchTag, batchId) applied to the table directory at `root`
+    * (the shard corpus of [[appendTrainingShards]], the bucketed table
+    * of [[graft.streaming.Incremental.refreshStream]]), or None if the
+    * `_last_batch` manifest is absent (cold start / pre-manifest table)
+    * OR unreadable/malformed — a truncated or
     * torn manifest (non-atomic object-store rename, partial create)
     * must degrade to the documented at-least-once re-append window,
     * not permanently crash every subsequent micro-batch. Manifest
     * format: tag line, then id line.
     */
-  private[graft] def lastAppliedShardBatch(
+  private[graft] def lastAppliedBatch(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(String, Long)] = {
     val m = new org.apache.hadoop.fs.Path(root, "_last_batch")
@@ -261,9 +263,10 @@ object Sinks {
     * all). Caveat: object stores (s3a) implement rename as
     * copy+delete, so no manifest scheme is atomic there — a torn read
     * degrades to the at-least-once re-append window via
-    * [[lastAppliedShardBatch]]'s fail-open parse.
+    * [[lastAppliedBatch]]'s fail-open parse. The manifest name starts
+    * with `_`, so Spark's file listing (and any table scan) skips it.
     */
-  private def recordShardBatch(
+  private[graft] def recordBatch(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       batchId: Long,

@@ -224,9 +224,17 @@ object FnvHashExpr {
   * bᵢ) % p minimized over the set (p = 2³¹−1; aᵢ ≤ ~1.3e7 keeps
   * xm·aᵢ ≪ 2⁶³, no overflow). An empty set yields Long.MaxValue per
   * slot, as the UDF did.
+  *
+  * The permutation coefficients are `IndexedSeq` fields so that two
+  * equal constructions are equal (and `semanticEquals`, which
+  * canonicalization and common-subexpression elimination rely on);
+  * eval and codegen read them as primitive arrays.
   */
-case class MinHashSigExpr(child: Expression, as: Array[Long], bs: Array[Long], p: Long)
+case class MinHashSigExpr(child: Expression, as: IndexedSeq[Long], bs: IndexedSeq[Long], p: Long)
     extends UnaryExpression {
+
+  @transient private lazy val aArr: Array[Long] = as.toArray
+  @transient private lazy val bArr: Array[Long] = bs.toArray
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -238,12 +246,12 @@ case class MinHashSigExpr(child: Expression, as: Array[Long], bs: Array[Long], p
   }
 
   override def nullSafeEval(input: Any): Any =
-    MinHashSigExpr.evalSig(input.asInstanceOf[ArrayData], as, bs, p)
+    MinHashSigExpr.evalSig(input.asInstanceOf[ArrayData], aArr, bArr, p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val aRef = ctx.addReferenceObj("mhA", as, "long[]")
-      val bRef = ctx.addReferenceObj("mhB", bs, "long[]")
+      val aRef = ctx.addReferenceObj("mhA", aArr, "long[]")
+      val bRef = ctx.addReferenceObj("mhB", bArr, "long[]")
       s"${ev.value} = graft.plans.MinHashSigExpr.evalSig($c, $aRef, $bRef, ${p}L);"
     })
 
@@ -251,6 +259,9 @@ case class MinHashSigExpr(child: Expression, as: Array[Long], bs: Array[Long], p
     copy(child = newChild)
 
   override def prettyName: String = "minhash_sig"
+
+  // the permutation count, not every coefficient, in plan strings
+  override protected def stringArgs: Iterator[Any] = Iterator(child, as.length, p)
 }
 
 object MinHashSigExpr {
@@ -296,5 +307,5 @@ object GramHash {
 
   /** Full MinHash signature of a hashed-shingle array. */
   def minhash_sig(c: Column, as: Array[Long], bs: Array[Long], p: Long): Column =
-    toColumn(MinHashSigExpr(toExpr(c), as, bs, p))
+    toColumn(MinHashSigExpr(toExpr(c), as.toIndexedSeq, bs.toIndexedSeq, p))
 }

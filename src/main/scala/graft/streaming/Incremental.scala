@@ -141,6 +141,38 @@ object Incremental {
     * after every batch. Near-dup clustering and packing are
     * corpus-global and stay batch over the accumulated table (the
     * lambda split, see [[curationStream]]).
+    *
+    * One micro-batch per landed increment: the query runs with
+    * no-data micro-batches off, so a run that lands one file commits
+    * exactly one batch. With them on, every run whose data moved the
+    * watermark ended with a second, EMPTY batch that only evicted
+    * dedup state — it can add no output (Append-mode dedup emits a row
+    * on first arrival) but cost its own jobs, state-store commits and
+    * an empty append. The watermark is not lost: the commit log keeps
+    * the next batch's watermark, so the following run's first data
+    * batch runs with it and evicts then. Consequence: between runs the
+    * dedup state can hold keys for one extra watermark step. The flag
+    * is set on the owning session only for the duration of `start()`
+    * (the query clones the session there) and is not written into the
+    * checkpoint.
+    *
+    * The clone also runs without per-session artifact isolation unless
+    * the owner has artifacts of its own. With isolation, each run's new
+    * session id gives its tasks a fresh executor class loader, so every
+    * commit recompiles its generated classes (about 20) and runs them
+    * cold again. Without it, the tasks share the default class loader
+    * and the generated-code cache, which see the same classes when the
+    * owner added none.
+    *
+    * The history is counted once at query start: that count sizes the
+    * Bloom filter and stands in for the empty-history probe.
+    *
+    * Replays are idempotent: the batchId goes to the table's
+    * `_last_batch` manifest ([[graft.io.Sinks.lastAppliedBatch]], tag =
+    * checkpointDir), so a batch re-run after a crash between the
+    * append and the commit-log write is skipped instead of appended
+    * twice. The same one-crash window as the shard sink stays open
+    * (between the append and the manifest write).
     */
   def refreshStream(
       docs: DataFrame, // streaming; (idCol, textCol, eventTimeCol)
@@ -160,30 +192,54 @@ object Incremental {
     // holds at 10^9-key histories instead of silently degrading —
     // undersizing is still CORRECT (the exact anti-join kills false
     // positives), just slower
-    val novel = graft.dedup.Dedup.bloomAntiJoin(docs, history, idCol,
-      expectedItems = math.max(1000000L, history.count()))
+    val nHist = history.count()
+    val novel =
+      if (nHist == 0L) docs
+      else graft.dedup.Dedup.bloomAntiJoinNonEmpty(docs, history, idCol,
+        expectedItems = math.max(1000000L, nHist), fpp = 0.01)
     val curated = curationStream(novel, idCol, textCol, eventTimeCol, cfg, watermarkDelay)
       .select(col(idCol), col("lang_pred"), col("clean_text"))
-    curated.writeStream
+    val writer = curated.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        if (s.catalog.tableExists(tableName))
-          graft.layout.Layout.appendBucketed(batch, tableName)
-        else
-          graft.layout.Layout.writeBucketed(batch, tableName, idCol, buckets)
-        // foreachBatch executes in a CLONED session whose insertInto
-        // auto-refresh touches only the clone's relation cache — the
-        // OWNING session (which started the query and will read the
-        // table) would otherwise keep a stale file listing for any
-        // table it had already scanned before this append (bit us as
-        // "restart appended nothing": the append was on disk, the
-        // reader's cached listing predated it)
-        owner.catalog.refreshTable(tableName)
+        val exists = s.catalog.tableExists(tableName)
+        def dir = new org.apache.hadoop.fs.Path(s.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(tableName)).location)
+        def fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+        // checkpointDir as the manifest tag, as in shardStream
+        val replayed = exists && graft.io.Sinks.lastAppliedBatch(fs, dir)
+          .exists { case (tag, id) => tag == checkpointDir && batchId <= id }
+        // a replayed batch is still executed, without a sink: the
+        // dedup operator's state stores commit only when every
+        // partition runs, and the batch fails validation otherwise
+        if (replayed) batch.write.format("noop").mode("overwrite").save()
+        else {
+          if (exists) graft.layout.Layout.appendBucketed(batch, tableName)
+          else graft.layout.Layout.writeBucketed(batch, tableName, idCol, buckets)
+          graft.io.Sinks.recordBatch(fs, dir, batchId, checkpointDir)
+          // foreachBatch executes in a CLONED session whose insertInto
+          // auto-refresh touches only the clone's relation cache — the
+          // OWNING session (which started the query and will read the
+          // table) would otherwise keep a stale file listing for any
+          // table it had already scanned before this append (bit us as
+          // "restart appended nothing": the append was on disk, the
+          // reader's cached listing predated it)
+          owner.catalog.refreshTable(tableName)
+        }
       }
-      .start()
+    // the query clones `owner` inside start(): set the flags for that
+    // call only, and restore the caller's settings even if start() throws
+    val keys = "spark.sql.streaming.noDataMicroBatches.enabled" +:
+      (if (org.apache.spark.sql.graft.bridge.hasSessionArtifacts(owner)) Nil
+      else Seq("spark.sql.artifact.isolation.enabled"))
+    val prior = keys.map(k =>
+      k -> (if (owner.sessionState.conf.contains(k)) Some(owner.conf.get(k)) else None))
+    keys.foreach(owner.conf.set(_, "false"))
+    try writer.start()
+    finally prior.foreach { case (k, v) => v.fold(owner.conf.unset(k))(owner.conf.set(k, _)) }
   }
 
   /** Streaming face of the training-shard sink: every micro-batch of

@@ -721,7 +721,9 @@ object TextAnalysis {
     // layout matches hashing the ngramsUdf string (gramHashesUdf doc);
     // an aliasing collision (~n²/2^64) is the same vanishing
     // perturbation class every shingle-hash path carries.
-    val hashedModel = model.select(fnvUdf(col("bigram")).as("__gh"), col("c2"))
+    // c2 as long: any integral count type is accepted (the local sum
+    // below reads it with getLong)
+    val hashedModel = model.select(fnvUdf(col("bigram")).as("__gh"), col("c2").cast("long").as("c2"))
     // ONE model scan (round 16): the normalizing total used to be a
     // separate scalar aggregate over the model subtree, so the model
     // evaluated twice per call. When the model broadcasts (the default)

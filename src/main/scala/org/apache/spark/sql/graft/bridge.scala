@@ -19,6 +19,18 @@ object bridge {
   def toExprEager(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 
+  /** True once an artifact has been added to this session
+    * (`SparkSession.addArtifact`): its jobs then need the session's own
+    * class loader and files on the executors. The flag is a protected
+    * member in Scala and a public accessor in bytecode, hence the
+    * reflective read.
+    */
+  def hasSessionArtifacts(spark: org.apache.spark.sql.SparkSession): Boolean = {
+    val am = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].artifactManager
+    classOf[org.apache.spark.sql.artifact.ArtifactManager].getMethod("sessionArtifactAdded")
+      .invoke(am).asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get
+  }
+
   def ofRows(
       spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan

@@ -107,4 +107,16 @@ class GramHashSpec extends SparkTestBase {
       .collect().map(_.getSeq[Long](0))
     sets.zip(got).foreach { case (xs, s) => assert(s == refSig(xs), xs) }
   }
+
+  test("minhash_sig: two equal constructions are semanticEquals") {
+    // separate arrays with equal contents, as two call sites build them
+    def sig() = GramHash.minhash_sig(col("xs"), Array(3L, 5L), Array(7L, 11L), 2147483647L)
+    val df = Seq(Seq(1L, 2L)).toDF("xs")
+    val Seq(a, b) = df.select(sig(), sig()).queryExecution.analyzed.expressions
+      .map(_.children.head)
+    assert(a.semanticEquals(b))
+    val other = df.select(GramHash.minhash_sig(col("xs"), Array(3L, 5L), Array(7L, 13L),
+      2147483647L)).queryExecution.analyzed.expressions.head.children.head
+    assert(!a.semanticEquals(other))
+  }
 }

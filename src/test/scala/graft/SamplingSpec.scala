@@ -200,6 +200,26 @@ class SamplingSpec extends SparkTestBase {
     assert(!got(2).getAs[Boolean]("keep"))
   }
 
+  test("lmQuality accepts an int c2 model on the broadcast AND shuffle paths") {
+    val reference = Seq(
+      (10L, "the cat sat on the mat"),
+      (20L, "the cat sat on the rug")
+    ).toDF("doc_id", "text")
+    val model = TextAnalysis.bigramModel(reference, "text", minCount = 2L)
+    val intModel = model.withColumn("c2", col("c2").cast("int"))
+    val docs = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "dogs bark at the moon"),
+      (3L, "word")
+    ).toDF("doc_id", "text")
+    for (bc <- Seq(true, false)) {
+      def run(m: org.apache.spark.sql.DataFrame) = TextAnalysis
+        .lmQuality(docs, "doc_id", "text", m, broadcastModel = bc)
+        .orderBy("doc_id").collect().toSeq
+      assert(run(intModel) == run(model), s"broadcastModel = $bc")
+    }
+  }
+
   test("temperaturePlan targets sum EXACTLY to budget at every alpha") {
     import graft.text.Sampling
     // 3 sources with 1/4/16 tokens — powers of 4 so n^(1/4) chains are exact

@@ -467,6 +467,182 @@ class StreamBatchParitySpec extends SparkTestBase {
       graft.layout.Layout.dropWithLocation(spark, tableName)
   }
 
+  /** Docs `from until until` in the fixture's (doc_id, text) shape:
+    * distinct English sentences that pass the default curation gates.
+    */
+  private def gatedDocs(from: Long, until: Long): org.apache.spark.sql.DataFrame =
+    spark.range(from, until).select(col("id").as("doc_id"),
+      concat(lit("the report "), col("id").cast("string"),
+        lit(" says that the river and the forest of the valley are quiet in the morning"))
+        .as("text"))
+
+  /** One refreshStream run per landed increment over `dir`, as the
+    * resume loop drives it: event time is `doc_id + 1 + offsetS`
+    * seconds, the history is empty, and the run is drained before it
+    * returns.
+    */
+  private def refreshRun(
+      src: org.apache.spark.sql.DataFrame,
+      dir: java.nio.file.Path,
+      tableName: String,
+      ckpt: String,
+      offsetS: Long = 0L,
+      watermarkDelay: String = "1 hour")
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val stream = spark.readStream.schema(src.schema).parquet(dir.toString + "/*")
+      .withColumn("ets", timestamp_seconds(col("doc_id") + 1L + offsetS))
+    val q = Incremental.refreshStream(stream, src.limit(0).select("doc_id"),
+      "doc_id", "text", "ets", tableName, ckpt, watermarkDelay = watermarkDelay)
+    q.awaitTermination()
+    q
+  }
+
+  test("refresh stream: one run over one landed file commits ONE " +
+    "micro-batch (no trailing empty watermark batch)") {
+    val src = gatedDocs(0L, 60L)
+    val dir = Files.createTempDirectory("graftonebatch")
+    val tableName = "graft_one_batch_t"
+    val ckpt = Files.createTempDirectory("graftonebatchckpt").toString
+    try {
+      src.coalesce(1).write.parquet(dir.resolve("a").toString)
+      // event times 1..60 s under a 1 s delay: the run moves the
+      // watermark, which used to buy a second, empty batch
+      val q = refreshRun(src, dir, tableName, ckpt, watermarkDelay = "1 second")
+      val ps = q.recentProgress
+      assert(ps.length == 1,
+        s"expected one progress event, got ${ps.map(_.numInputRows).mkString(", ")} input rows")
+      assert(ps.head.numInputRows > 0L)
+    } finally
+      graft.layout.Layout.dropWithLocation(spark, tableName)
+  }
+
+  test("refresh stream: the watermark step a run leaves pending is " +
+    "applied by the next run's first data batch, which evicts state") {
+    import spark.implicits._
+    val src = gatedDocs(0L, 120L)
+    val dir = Files.createTempDirectory("graftevict")
+    val tableName = "graft_evict_t"
+    val ckpt = Files.createTempDirectory("graftevictckpt").toString
+    try {
+      // run 1: event times 1..60 s
+      src.filter(col("doc_id") < 60L).coalesce(1).write.parquet(dir.resolve("a").toString)
+      val p1 = refreshRun(src, dir, tableName, ckpt, watermarkDelay = "1 second")
+        .recentProgress
+      assert(p1.length == 1)
+      // run 2: event times far past run 1's
+      src.filter(col("doc_id") >= 60L).coalesce(1).write.parquet(dir.resolve("b").toString)
+      val p2 = refreshRun(src, dir, tableName, ckpt, offsetS = 100000L,
+        watermarkDelay = "1 second").recentProgress
+      assert(p2.length == 1)
+      val max1 = java.time.Instant.parse(p1.head.eventTime.get("max"))
+      val wm2 = java.time.Instant.parse(p2.head.eventTime.get("watermark"))
+      assert(wm2 == max1.minusSeconds(1L), s"run-2 watermark $wm2, run-1 max $max1")
+      val dedup = p2.head.stateOperators.filter(_.operatorName.toLowerCase.contains("dedup"))
+      assert(dedup.nonEmpty, p2.head.stateOperators.map(_.operatorName).mkString(", "))
+      assert(dedup.map(_.numRowsRemoved).sum > 0L,
+        "run 2 evicted nothing: the pending watermark step was lost")
+      // eviction does not change what landed: every id once
+      val ids = graft.layout.Layout.readTable(spark, tableName)
+        .select("doc_id").as[Long].collect()
+      assert(ids.length == ids.distinct.length && ids.exists(_ >= 60L))
+    } finally
+      graft.layout.Layout.dropWithLocation(spark, tableName)
+  }
+
+  test("refresh stream leaves the owner session's no-data-batch and " +
+    "artifact-isolation flags as it found them, also when start() throws") {
+    val keys = Seq("spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.artifact.isolation.enabled")
+    val src = gatedDocs(0L, 30L)
+    val dir = Files.createTempDirectory("graftflag")
+    val tableName = "graft_flag_t"
+    src.coalesce(1).write.parquet(dir.resolve("a").toString)
+    val before = keys.map(spark.conf.get)
+    try {
+      refreshRun(src, dir, tableName,
+        Files.createTempDirectory("graftflagckpt").toString)
+      assert(keys.map(spark.conf.get) == before)
+      // explicit settings survive a start() that throws: the
+      // checkpoint path is a regular file
+      keys.foreach(spark.conf.set(_, "true"))
+      val notADir = Files.createTempFile("graftflagckpt", ".txt").toString
+      intercept[Exception](refreshRun(src, dir, tableName, notADir))
+      assert(keys.map(spark.conf.get) == Seq("true", "true"))
+    } finally {
+      keys.foreach(spark.conf.unset)
+      graft.layout.Layout.dropWithLocation(spark, tableName)
+    }
+  }
+
+  test("refresh stream: a repeated run compiles no generated classes " +
+    "(its tasks reuse the class loader and code cache of earlier runs)") {
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val src = gatedDocs(0L, 90L)
+    val dir = Files.createTempDirectory("graftcodegen")
+    val tableName = "graft_codegen_t"
+    val ckpt = Files.createTempDirectory("graftcodegenckpt").toString
+    def land(name: String, from: Long) =
+      src.filter(col("doc_id") >= from && col("doc_id") < from + 30L)
+        .coalesce(1).write.parquet(dir.resolve(name).toString)
+    try {
+      // runs 1 and 2 compile the create and the append shapes
+      land("a", 0L)
+      refreshRun(src, dir, tableName, ckpt)
+      land("b", 30L)
+      refreshRun(src, dir, tableName, ckpt)
+      land("c", 60L)
+      val n0 = compiled.getCount
+      val q = refreshRun(src, dir, tableName, ckpt)
+      assert(q.recentProgress.map(_.numInputRows).sum == 30L)
+      // with a fresh executor class loader per run, every run
+      // recompiled each of its stages' classes
+      assert(compiled.getCount - n0 == 0L,
+        s"run 3 compiled ${compiled.getCount - n0} generated classes")
+    } finally
+      graft.layout.Layout.dropWithLocation(spark, tableName)
+  }
+
+  test("a session has artifacts of its own only once one is added " +
+    "(the refresh query keeps isolation for such an owner)") {
+    val s = spark.newSession()
+    assert(!org.apache.spark.sql.graft.bridge.hasSessionArtifacts(s))
+    val jar = Files.createTempFile("graftartifact", ".jar")
+    val out = new java.util.jar.JarOutputStream(Files.newOutputStream(jar))
+    try out.putNextEntry(new java.util.zip.ZipEntry("graft/empty.txt")) finally out.close()
+    s.addArtifact(jar.toUri)
+    assert(org.apache.spark.sql.graft.bridge.hasSessionArtifacts(s))
+    assert(!org.apache.spark.sql.graft.bridge.hasSessionArtifacts(spark))
+  }
+
+  test("refresh stream REPLAY: a batch re-run after a crash before its " +
+    "commit-log write is not appended twice") {
+    import spark.implicits._
+    val src = gatedDocs(0L, 60L)
+    val dir = Files.createTempDirectory("graftreplay")
+    val tableName = "graft_replay_t"
+    val ckpt = Files.createTempDirectory("graftreplayckpt").toString
+    def ids() = graft.layout.Layout.readTable(spark, tableName)
+      .select("doc_id").as[Long].collect().toSeq
+    try {
+      src.coalesce(1).write.parquet(dir.resolve("a").toString)
+      refreshRun(src, dir, tableName, ckpt)
+      val first = ids()
+      assert(first.nonEmpty)
+      // the crash window: batch 0 appended, its commit never written
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val commits = new org.apache.hadoop.fs.Path(ckpt, "commits")
+      assert(fs.listStatus(commits).map(_.getPath.getName).filterNot(_.startsWith("."))
+        .toSeq == Seq("0"))
+      assert(fs.delete(new org.apache.hadoop.fs.Path(commits, "0"), false))
+      refreshRun(src, dir, tableName, ckpt)
+      val again = ids()
+      assert(again.length == again.distinct.length, "replayed batch re-appended")
+      assert(again.sorted == first.sorted)
+    } finally
+      graft.layout.Layout.dropWithLocation(spark, tableName)
+  }
+
   test("near-dup stream RESUMES from its checkpoint: LSH bucket state " +
     "survives the restart — cross-restart pairs close, committed pairs " +
     "are not re-emitted") {
@@ -718,7 +894,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     // 5. manifest recorded the final batch of the lineage
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val last = graft.io.Sinks.lastAppliedShardBatch(
+    val last = graft.io.Sinks.lastAppliedBatch(
       fs, new org.apache.hadoop.fs.Path(streamPath))
     assert(last.exists(_._2 == 1L), s"manifest should end at batch 1, got $last")
   }
@@ -794,7 +970,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     for (corrupt <- Seq("ck1", "", "ck1\nnot-a-number")) {
       val out = fs.create(manifest, true)
       try out.write(corrupt.getBytes("UTF-8")) finally out.close()
-      assert(graft.io.Sinks.lastAppliedShardBatch(
+      assert(graft.io.Sinks.lastAppliedBatch(
         fs, new org.apache.hadoop.fs.Path(path)).isEmpty,
         s"malformed manifest ${corrupt.replace("\n", "\\n")} did not fail open")
     }
@@ -804,7 +980,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     val hi = src.filter($"doc_id" >= 100L && $"doc_id" < 150L)
     graft.io.Sinks.appendTrainingShards(
       hi, "doc_id", "text", path, 512L, batchId = 1L, batchTag = "ck1")
-    assert(graft.io.Sinks.lastAppliedShardBatch(
+    assert(graft.io.Sinks.lastAppliedBatch(
       fs, new org.apache.hadoop.fs.Path(path)).contains(("ck1", 1L)))
     val n = spark.read.parquet(path).count()
     assert(n == lo.count() + hi.count())
